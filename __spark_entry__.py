@@ -147,15 +147,11 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]):
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         from cs537_spring2021_p3a_mapreduce_spark.session import (
             release_persisted,
-            unload_state_providers,
         )
 
+        # terminated-stream state providers need no release here:
+        # streaming.drain unloads them as each drain ends
         release_persisted()
-        # likewise drop the PREVIOUS query's terminated-stream state
-        # providers: a session running hundreds of drains otherwise
-        # accumulates their in-heap state maps until the 60 s
-        # maintenance tick (measured escalation, see session.py)
-        unload_state_providers(spark)
         return fn(spark, sf_dir)
 
     wrapped.__name__ = getattr(fn, "__name__", "query")

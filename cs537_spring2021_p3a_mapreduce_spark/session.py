@@ -129,28 +129,39 @@ def unload_state_providers(spark) -> None:
     provider maps on heap until the provider-maintenance tick (60 s
     default) unloads them — measured at sf0.1: back-to-back LSH-join
     drains escalate 18 s → 55 s per run from the accumulated heap
-    pressure, and hold flat at 2-7 s with prompt unload. Callers
-    invoke this between queries / after awaitTermination, where every
-    query is terminated. On a real cluster the call touches the
+    pressure, and hold flat at 2-7 s with prompt unload.
+    ``streaming.drain`` calls it after stopping each query, where
+    every query is terminated. On a real cluster the call touches the
     driver-local providers only; executor providers unload via the
-    coordinator's deactivation broadcast as usual. No-op on sessions
-    without a JVM gateway (logged once, not swallowed silently)."""
+    coordinator's deactivation broadcast as usual. A skip (a stream
+    is active) and a no-op on sessions without a JVM gateway are each
+    logged once, not swallowed silently."""
     try:
         if spark.streams.active:
+            _warn_once(
+                "active",
+                "unload_state_providers: skipped while a stream is "
+                "active; state providers will unload on the maintenance "
+                "tick",
+            )
             return
         jvm = spark._jvm
         jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception as exc:
-        global _UNLOAD_WARNED
-        if not _UNLOAD_WARNED:
-            _UNLOAD_WARNED = True
-            import sys
-
-            print(
-                f"unload_state_providers: JVM call failed ({exc!r}); "
-                "state providers will unload on the maintenance tick",
-                file=sys.stderr,
-            )
+        _warn_once(
+            "jvm",
+            f"unload_state_providers: JVM call failed ({exc!r}); "
+            "state providers will unload on the maintenance tick",
+        )
 
 
-_UNLOAD_WARNED = False
+_UNLOAD_WARNED: set[str] = set()
+
+
+def _warn_once(kind: str, msg: str) -> None:
+    """Print ``msg`` to stderr the first time ``kind`` happens."""
+    if kind not in _UNLOAD_WARNED:
+        _UNLOAD_WARNED.add(kind)
+        import sys
+
+        print(msg, file=sys.stderr)

@@ -16,7 +16,10 @@ the watermark.
 
 from __future__ import annotations
 
+import ast
+import json
 import os
+import time
 from collections.abc import Iterable
 from typing import Any
 
@@ -324,7 +327,9 @@ def run_to_keyed_parquet(
     the documented Spark pattern for sinks without native streaming
     writers; with a transactional table (Delta/Iceberg) the same
     callback body becomes an atomic MERGE, giving exactly-once.
-    Drains available input (availableNow) and blocks."""
+    Drains available input (availableNow) through ``drain``: returns
+    only once every batch has merged, raises if the drain fails or
+    outlasts ``DRAIN_TIMEOUT_S``."""
     from ..sources import upsert_keyed_parquet
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -332,26 +337,103 @@ def run_to_keyed_parquet(
             batch_df.sparkSession, batch_df, path, key_cols
         )
 
-    q = (
+    drain(
         df.writeStream.foreachBatch(_merge)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+
+
+# Bound on every drain. The slowest measured drain (an LSH join at
+# sf0.1) takes ~17 s; the bound only turns a stuck stream into an error.
+DRAIN_TIMEOUT_S = 300
+
+
+class EndOffsetReached:
+    """``drain`` condition for an offset-paced source: holds once the
+    first source's reported ``endOffset[key]`` reaches ``target``.
+    pyspark hands endOffset over as a dict, a JSON string or a repr
+    string depending on the path; this is the one place that parses
+    it."""
+
+    def __init__(self, key: str, target: int) -> None:
+        self.key, self.target = key, target
+
+    def __call__(self, progress) -> bool:
+        if not progress["sources"]:
+            return False
+        end = progress["sources"][0].get("endOffset")
+        if isinstance(end, str):
+            try:
+                end = json.loads(end)
+            except ValueError:
+                end = ast.literal_eval(end)
+        return bool(end) and end.get(self.key, 0) >= self.target
+
+
+def drain(writer, until=None):
+    """Start ``writer`` (an unstarted DataStreamWriter), run the stream
+    to its end and return the stopped query (``recentProgress`` stays
+    readable). This is the package's only place that starts, waits on
+    or stops a streaming query, so no caller reads output from a
+    stream that is still running.
+
+    Without ``until`` the query must end by itself (availableNow):
+    one ``awaitTermination(DRAIN_TIMEOUT_S)``. With ``until`` it runs
+    until ``until(lastProgress)`` holds; after an ``EndOffsetReached``
+    condition one more processAllAvailable() cycle lets the final
+    batch's output commit.
+
+    Raises TimeoutError once ``DRAIN_TIMEOUT_S`` passes, and the
+    query's own failure (StreamingQueryException) when it fails.
+    Always stops the query and then unloads the state-store providers
+    (``session.unload_state_providers``), on failure too."""
+    from .. import session
+
+    q = writer.start()
+    try:
+        if until is None:
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
+                raise TimeoutError(
+                    f"stream {q.name or q.id} still running after "
+                    f"DRAIN_TIMEOUT_S={DRAIN_TIMEOUT_S}s"
+                )
+            return q
+        deadline = time.monotonic() + DRAIN_TIMEOUT_S
+        while not ((p := q.lastProgress) and until(p)):
+            # the poll step raises the query's failure as soon as it
+            # happens, instead of burning the whole bound
+            if q.awaitTermination(0.05):
+                raise RuntimeError(
+                    f"stream {q.name or q.id} ended before its drain "
+                    "condition held"
+                )
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"stream {q.name or q.id}: drain condition not met "
+                    f"within DRAIN_TIMEOUT_S={DRAIN_TIMEOUT_S}s"
+                )
+        if isinstance(until, EndOffsetReached):
+            q.processAllAvailable()
+        return q
+    finally:
+        q.stop()
+        session.unload_state_providers(writer._spark)
 
 
 def _copy_table_files(
     sf_dir: str, name: str, dst_dir: str, tag: str = ""
 ) -> None:
-    """Stage a table's parquet file(s) into ``dst_dir`` — handles
-    BOTH layouts: the fixtures' single ``<name>.parquet`` file and a
-    Spark-written ``<name>.parquet/`` DIRECTORY of part files (what
-    any engine-generated dataset looks like)."""
+    """Stage a table's parquet file(s) into ``dst_dir`` (created if
+    missing) — handles BOTH layouts: the fixtures' single
+    ``<name>.parquet`` file and a Spark-written ``<name>.parquet/``
+    DIRECTORY of part files (what any engine-generated dataset looks
+    like)."""
     import glob
     import shutil
 
+    os.makedirs(dst_dir, exist_ok=True)
     src = os.path.join(sf_dir, f"{name}.parquet")
     files = (
         sorted(glob.glob(os.path.join(src, "*.parquet")))
@@ -362,14 +444,30 @@ def _copy_table_files(
         shutil.copy(f, os.path.join(dst_dir, f"part-{tag}{i}.parquet"))
 
 
+def _staged_stream(
+    spark: SparkSession, sf_dir: str, work: str, table: str
+) -> DataFrame:
+    """Copy ``table`` into ``<work>/in`` (the file-stream source needs
+    a directory basePath, not a bare file) and open that directory as
+    a stream. Streams can't infer schemas, so the schema comes from one
+    footer read of the table, with epoch-nanos timestamps read as longs
+    like the batch catalog reads them. Call once per directory: every
+    call copies the files again. A site that needs reader options or
+    the directory path stages with ``_copy_table_files`` and builds its
+    own reader."""
+    src = os.path.join(work, "in")
+    _copy_table_files(sf_dir, table, src)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
+    return spark.readStream.schema(schema).parquet(src)
+
+
 def _staged_events_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
-    """Copy the events table into a fresh directory (the file-stream
-    source requires a directory basePath, not a bare file) and open
-    it as the standard events stream."""
-    src_dir = os.path.join(work, "in")
-    os.makedirs(src_dir, exist_ok=True)
-    _copy_table_files(sf_dir, "events", src_dir)
-    return stream_events(spark, src_dir)
+    """The events table staged by ``_staged_stream`` as the standard
+    events stream: ``ts`` normalized like ``stream_events``."""
+    from ..catalog import normalize_event_ts
+
+    return normalize_event_ts(_staged_stream(spark, sf_dir, work, "events"))
 
 
 def stream_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,12 +569,10 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: event_id, user_id, event_type, n (always 1 — the count
     aggregate would double without the dedup, which is what makes
     this value-check the dedup and not just the plumbing)."""
-    import shutil
     import uuid
 
     work = scratch_dir("stream_dd_")
     src_dir = os.path.join(work, "in")
-    os.makedirs(src_dir, exist_ok=True)
     for copy in (0, 1):
         _copy_table_files(sf_dir, "events", src_dir, tag=f"{copy}_")
     deduped = dedup_stream(
@@ -650,8 +746,6 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: purchase_id, click_id (null if no prior click), user_id,
     gap_s (null if unmatched)."""
-    import glob
-    import shutil
     import uuid
 
     work = scratch_dir("stream_oj_")
@@ -749,51 +843,20 @@ def stream_custom_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source's committed offset reaches the file's row count — the
     # offset axis IS the progress signal, which is the point of this
     # entry.
-    import time
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     # 2 state partitions: the aggregate has a handful of groups, and
     # per-batch cost here is state-store commits x partitions, not
     # data (measured: 8 partitions ~0.6 s/batch, 2 ~0.35 s/batch)
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        q = (
+        drain(
             counts.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
+            .trigger(processingTime="0 seconds"),
+            until=EndOffsetReached("rank", n_rows),
         )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            # surface a failed query NOW — polling lastProgress on a
-            # dead query would otherwise burn the whole timeout and
-            # raise a misleading TimeoutError instead of the cause
-            exc = q.exception()
-            if exc is not None:
-                raise exc
-            p = q.lastProgress
-            if p and p["sources"]:
-                end = p["sources"][0].get("endOffset")
-                if isinstance(end, str):
-                    # dict in some pyspark paths, JSON or repr string
-                    # in others — accept all three
-                    import ast
-                    import json
-
-                    try:
-                        end = json.loads(end)
-                    except ValueError:
-                        end = ast.literal_eval(end)
-                if end and end.get("rank", 0) >= n_rows:
-                    # one more cycle so the final batch's output commits
-                    q.processAllAvailable()
-                    break
-            time.sleep(0.05)
-        else:
-            q.stop()
-            raise TimeoutError("mr_eventlog drain did not reach EOF offset")
-        q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
@@ -860,11 +923,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     work = scratch_dir("stream_ohlc_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "events", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    ev = spark.readStream.schema(schema).parquet(src)
+    ev = _staged_stream(spark, sf_dir, work, "events")
     cents = F.round(F.col("value") * 100).cast("long")
     # the staged parquet reads ts as TIMESTAMP_NTZ; session TZ is UTC
     # so the cast is wall-clock identity (unix_micros needs TIMESTAMP)
@@ -921,11 +980,7 @@ def stream_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm import gopher_flags
 
     work = scratch_dir("stream_gq_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs = spark.readStream.schema(schema).parquet(src)
+    docs = _staged_stream(spark, sf_dir, work, "documents")
     flags = gopher_flags(docs)
     audit = flags.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -975,10 +1030,6 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm import DECON_EVAL_MOD, DECON_K
 
     work = scratch_dir("stream_dc_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
 
     def gram_arr() -> F.Column:
         arr = F.col("ts")
@@ -1003,7 +1054,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     ev_row = ev_docs.agg(F.collect_list("sh").alias("evs"))
-    docs = spark.readStream.schema(schema).parquet(src)
+    docs = _staged_stream(spark, sf_dir, work, "documents")
     out = (
         docs.where(F.col("doc_id") % DECON_EVAL_MOD != 0)
         .select("doc_id", tokens("text").alias("ts"))
@@ -1112,14 +1163,8 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..operators.dedup import _md5_fold
-
     work = scratch_dir("stream_bk_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs = spark.readStream.schema(schema).parquet(src)
+    docs = _staged_stream(spark, sf_dir, work, "documents")
     out = bottomk_sample_stream(docs)
     name = f"stream_bk_{uuid.uuid4().hex[:8]}"
     run_to_memory(
@@ -1195,11 +1240,7 @@ def stream_quality_filter_trained(spark: SparkSession, sf_dir: str) -> DataFrame
     _, wavg = _qclf_feats_and_wavg(spark, sf_dir)
     wavg = wavg.localCheckpoint()  # materialize the model ONCE
     work = scratch_dir("stream_qf_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs = spark.readStream.schema(schema).parquet(src)
+    docs = _staged_stream(spark, sf_dir, work, "documents")
     h = (
         "aggregate(filter(split(tok, ''), c -> c <> ''), 0L, "
         f"(a, c) -> (a * {FP_BASE} + ascii(c)) % {FP_MOD})"
@@ -1272,11 +1313,7 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = scratch_dir("stream_mh_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs = spark.readStream.schema(schema).parquet(src)
+    docs = _staged_stream(spark, sf_dir, work, "documents")
     toks = docs.select("doc_id", tokens("text").alias("toks"))
     arr = F.col("toks")
     n_windows = F.size(arr) - (SHINGLE_K - 1)
@@ -1403,11 +1440,7 @@ def stream_dedup_docs_minhash_bounded(
     )
 
     work = scratch_dir("stream_mhb_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs = spark.readStream.schema(schema).parquet(src)
+    docs = _staged_stream(spark, sf_dir, work, "documents")
     toks = docs.select(
         "doc_id",
         F.timestamp_seconds(F.lit(_LSH_EV_EPOCH) + F.col("doc_id")).alias(
@@ -1761,15 +1794,11 @@ def stream_dedup_docs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = scratch_dir("stream_lsh_")
     src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs_a = _lsh_band_rows(
-        spark.readStream.schema(schema).parquet(src), LSH_WATERMARK
-    )
-    docs_b = _lsh_band_rows(
-        spark.readStream.schema(schema).parquet(src), LSH_WATERMARK
-    )
+    raw = _staged_stream(spark, sf_dir, work, "documents")
+    # the self-join's other side: a second reader over the staged dir
+    raw_b = spark.readStream.schema(raw.schema).parquet(src)
+    docs_a = _lsh_band_rows(raw, LSH_WATERMARK)
+    docs_b = _lsh_band_rows(raw_b, LSH_WATERMARK)
     # static verify side (the "doc store"), STAGED to scratch parquet
     # once per query: a streaming query re-executes its static side
     # every microbatch (including the trailing watermark-eviction
@@ -1970,20 +1999,11 @@ def stream_dedup_docs_lsh_estimated(
     import uuid
 
     work = scratch_dir("stream_lshe_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs_a = _lsh_band_rows(
-        spark.readStream.schema(schema).parquet(src),
-        LSH_WATERMARK,
-        payload="estimated",
-    )
-    docs_b = _lsh_band_rows(
-        spark.readStream.schema(schema).parquet(src),
-        LSH_WATERMARK,
-        payload="estimated",
-    )
+    raw = _staged_stream(spark, sf_dir, work, "documents")
+    # the self-join's other side: a second reader over the staged dir
+    raw_b = spark.readStream.schema(raw.schema).parquet(os.path.join(work, "in"))
+    docs_a = _lsh_band_rows(raw, LSH_WATERMARK, payload="estimated")
+    docs_b = _lsh_band_rows(raw_b, LSH_WATERMARK, payload="estimated")
     pairs = dedup_docs_lsh_stream_estimated(docs_a, docs_b)
     name = f"stream_lshe_{uuid.uuid4().hex[:8]}"
     # 4 state partitions: the drain is a bounded staged input and
@@ -2106,10 +2126,6 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm import IVF_INT_K, PQ_INT_SCALE
 
     work = scratch_dir("stream_ivf_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "embeddings", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).schema
 
     # batch-side centroid build (the trained index being maintained)
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
@@ -2134,7 +2150,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     carr = cents.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
 
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _staged_stream(spark, sf_dir, work, "embeddings")
     sq = stream.select(
         "vec_id",
         F.expr(
@@ -2200,15 +2216,10 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's own semantics. Complete mode: the token-count
     state is vocabulary-sized (bounded), so emitting the full result
     per trigger is the honest finite-drain choice."""
-    import shutil
     import uuid
 
     work = scratch_dir("stream_wc_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    lines = spark.readStream.schema(schema).parquet(src)
+    lines = _staged_stream(spark, sf_dir, work, "documents")
     counts = streaming_wordcount(lines, "text")
     name = f"stream_wc_{uuid.uuid4().hex[:8]}"
     run_to_memory(
@@ -2238,11 +2249,7 @@ def stream_topk_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     work = scratch_dir("stream_topk_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    lines = spark.readStream.schema(schema).parquet(src)
+    lines = _staged_stream(spark, sf_dir, work, "documents")
     ranked = (
         streaming_wordcount(lines, "text")
         .orderBy(F.col("cnt").desc(), F.col("token"))
@@ -2269,12 +2276,8 @@ def state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: token, cnt — hash-checked against the batch SQL.
     """
     work = scratch_dir("state_inspect_")
-    src = os.path.join(work, "in")
     ckpt = os.path.join(work, "ckpt")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "documents", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    lines = spark.readStream.schema(schema).parquet(src)
+    lines = _staged_stream(spark, sf_dir, work, "documents")
     counts = streaming_wordcount(lines, "text")
     import uuid
 
@@ -2308,7 +2311,6 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: event_type, n_events, n_users."""
     import glob
     import shutil
-    import time
 
     from ..catalog import table as _table
 
@@ -2331,7 +2333,7 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(work, "ckpt")
     out = os.path.join(work, "out")
 
-    def start(**trigger):
+    def writer(**trigger):
         raw = (
             spark.readStream.schema(file_schema)
             .option("maxFilesPerTrigger", "1")
@@ -2343,34 +2345,18 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .trigger(**trigger)
-            .start()
         )
 
     # phase 1: run until the FIRST batch has committed, then kill —
     # lastProgress only appears after a commit, so ≥1 batch is in the
     # sink log; the stop may interrupt batch 2 mid-write, which is
     # the interesting case (its orphan parts must stay invisible)
-    q = start(processingTime="0 seconds")
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        exc = q.exception()
-        if exc is not None:
-            raise exc
-        p = q.lastProgress
-        if p and p.get("numInputRows", 0) > 0:
-            break
-        time.sleep(0.05)
-    else:
-        q.stop()
-        raise TimeoutError("restart-recovery phase 1 never committed a batch")
-    q.stop()
-
+    drain(
+        writer(processingTime="0 seconds"),
+        until=lambda p: p.get("numInputRows", 0) > 0,
+    )
     # phase 2: NEW query, SAME checkpoint — finish the drain
-    q2 = start(availableNow=True)
-    q2.awaitTermination(120)
-    exc = q2.exception()
-    if exc is not None:
-        raise exc
+    drain(writer(availableNow=True))
 
     back = spark.read.parquet(out)  # honors the _spark_metadata log
     return back.groupBy("event_type").agg(
@@ -2444,16 +2430,11 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta.write.mode("overwrite").parquet(new)
         state["path"] = new
 
-    q = (
+    drain(
         raw.writeStream.foreachBatch(merge)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
-    exc = q.exception()
-    if exc is not None:
-        raise exc
     return spark.read.parquet(state["path"])
 
 
@@ -2876,7 +2857,6 @@ def stream_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = scratch_dir("stream_mm_")
     src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
     _copy_table_files(sf_dir, "events", src)
     schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     path = os.path.join(work, "t")
@@ -2923,7 +2903,7 @@ def stream_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         1 for f in os.listdir(src) if f.endswith(".parquet")
     )
     per_trigger = max(1, (n_files + 2) // 3)
-    q = (
+    drain(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(per_trigger))
         .parquet(src)
@@ -2932,17 +2912,13 @@ def stream_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "checkpointLocation", os.path.join(work, f"ckpt_{uuid.uuid4().hex[:8]}")
         )
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
 
     # exercise the double-apply window: replay the ENTIRE input under
     # the final epoch — the skip must hold and the generation not move
-    import json as _json
-
     def _gen() -> int:
         with open(os.path.join(path, MANIFEST), encoding="utf-8") as fh:
-            return _json.load(fh)["generation"]
+            return json.load(fh)["generation"]
 
     gen_before = _gen()
     apply_batch(
@@ -3010,44 +2986,18 @@ def stream_manifest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trigger and stop once the committed offset reaches the table's
     # current generation — the offset axis IS the progress signal
     # (the mr_eventlog drain discipline)
-    import json as _json
-    import time as _time
-
     from ..sources.manifest_sink import MANIFEST as _MF
 
     with open(os.path.join(path, _MF), encoding="utf-8") as fh:
-        target_gen = _json.load(fh)["generation"]
-    q = (
+        target_gen = json.load(fh)["generation"]
+    drain(
         feed.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
+        .trigger(processingTime="0 seconds"),
+        until=EndOffsetReached("gen", target_gen),
     )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        exc = q.exception()
-        if exc is not None:
-            raise exc
-        p = q.lastProgress
-        if p and p["sources"]:
-            end = p["sources"][0].get("endOffset")
-            if isinstance(end, str):
-                import ast
-
-                try:
-                    end = _json.loads(end)
-                except ValueError:
-                    end = ast.literal_eval(end)
-            if end and end.get("gen", 0) >= target_gen:
-                q.processAllAvailable()
-                break
-        _time.sleep(0.05)
-    else:
-        q.stop()
-        raise TimeoutError("mr_manifest_cdf drain did not reach head gen")
-    q.stop()
     raw = spark.table(name)
     # update keys = (gen, k) carrying BOTH an insert and a delete —
     # one aggregate, and re-aliased to fresh names so the join back
@@ -3123,9 +3073,6 @@ def stream_custom_sink_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once retry path is pinned separately in
     ``tests/test_sources.py`` (same batchId re-commit publishes
     nothing)."""
-    import uuid
-
-    from ..catalog import table as _table
     from ..sources.stream_sink import EpochFileStreamSink, committed_files
 
     spark.dataSource.register(EpochFileStreamSink)
@@ -3136,17 +3083,12 @@ def stream_custom_sink_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    q = (
+    drain(
         ev.writeStream.format("eventlog_stream_sink")
         .option("path", out_dir)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
-    exc = q.exception()
-    if exc:
-        raise exc
     files = committed_files(out_dir)
     rows = spark.read.json(files) if files else None
     if rows is None:
@@ -3312,10 +3254,6 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     work = scratch_dir("stream_az_")
-    src = os.path.join(work, "in")
-    os.makedirs(src, exist_ok=True)
-    _copy_table_files(sf_dir, "events", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     x = F.round(F.col("value") * 100).cast("long")
     base = (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -3328,7 +3266,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("CAST(x AS decimal(38,0)) * x")).alias("q"),
         )
     )
-    events = spark.readStream.schema(schema).parquet(src)
+    events = _staged_stream(spark, sf_dir, work, "events")
     out = (
         events.where(F.col("value").isNotNull())
         .select("event_id", "event_type", x.alias("x_cents"))
@@ -3628,8 +3566,11 @@ def run_to_memory(
     shuffle_partitions: int | None = None,
 ):
     """Drain all currently-available input through the streaming
-    plan into an in-memory table (test/debug sink): availableNow
-    trigger, blocks until done. Production sinks are writeStream to
+    plan into an in-memory table (test/debug sink) with an availableNow
+    trigger, through ``drain``: returns the stopped query only once
+    every batch is in the table, raises if the drain fails or outlasts
+    ``DRAIN_TIMEOUT_S``, and always stops the query and unloads its
+    state providers. Production sinks are writeStream to
     parquet/Kafka with the same plan.
 
     ``shuffle_partitions`` scopes the state-store partition count to
@@ -3643,22 +3584,13 @@ def run_to_memory(
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        q = (
+        return drain(
             df.writeStream.format("memory")
             .queryName(table)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        return q  # terminated; recentProgress still readable (metrics)
     finally:
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the drain is done: release its state-store provider maps
-        # now rather than holding them on heap until the maintenance
-        # tick (see session.unload_state_providers)
-        from ..session import unload_state_providers
-
-        unload_state_providers(spark)

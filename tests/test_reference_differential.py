@@ -34,11 +34,12 @@ SF = "/root/testdata/sf0.001"
 def ref_binary(tmp_path_factory):
     if shutil.which("gcc") is None:
         pytest.skip("gcc not available")
+    sources = [os.path.join(REF, f) for f in ("mapreduce.c", "hashmap.c", "main.c")]
+    if not all(os.path.exists(f) for f in sources):
+        pytest.skip(f"reference sources not found under {REF}")
     out = tmp_path_factory.mktemp("refbin") / "ref_wordcount"
     subprocess.run(
-        ["gcc", "-O2", "-o", str(out)]
-        + [os.path.join(REF, f) for f in ("mapreduce.c", "hashmap.c", "main.c")]
-        + ["-lpthread"],
+        ["gcc", "-O2", "-o", str(out)] + sources + ["-lpthread"],
         check=True,
     )
     return str(out)

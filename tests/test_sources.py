@@ -1372,11 +1372,12 @@ def test_manifest_cdf_stream_per_generation_diffs(spark, tmp_path):
     offset step, a copy-on-write DELETE surfaces ONLY the deleted
     rows (survivors the rewrite merely moved between files cancel in
     the multiset diff), and an append surfaces only its new rows."""
-    import json
-    import time
-
     from cs537_spring2021_p3a_mapreduce_spark.sources.manifest_cdf import (
         ManifestCDFStreamSource,
+    )
+    from cs537_spring2021_p3a_mapreduce_spark.streaming import (
+        EndOffsetReached,
+        drain,
     )
     from cs537_spring2021_p3a_mapreduce_spark.sources.manifest_sink import (
         MANIFEST,
@@ -1408,39 +1409,17 @@ def test_manifest_cdf_stream_per_generation_diffs(spark, tmp_path):
         .option("start_gen", "1")
         .load()
     )
-    q = (
+    q = drain(
         feed.writeStream.format("memory")
         .queryName("cdf_test")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
+        .trigger(processingTime="0 seconds"),
+        until=EndOffsetReached("gen", 3),
     )
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        if q.exception() is not None:
-            raise q.exception()
-        p = q.lastProgress
-        if p and p["sources"]:
-            end = p["sources"][0].get("endOffset")
-            if isinstance(end, str):
-                import ast
-
-                try:
-                    end = json.loads(end)
-                except ValueError:
-                    end = ast.literal_eval(end)
-            if end and end.get("gen", 0) >= 3:
-                q.processAllAvailable()
-                break
-        time.sleep(0.05)
-    else:
-        q.stop()
-        raise TimeoutError("cdf drain stalled")
     # each generation drained as its own micro-batch (offset pacing)
     fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(fed) >= 2
-    q.stop()
     got = [
         (r.gen, r.change_type, r.k, r.v)
         for r in spark.table("cdf_test").collect()

@@ -4,6 +4,9 @@ batch/stream parity Spark's unified model promises."""
 
 from __future__ import annotations
 
+import pytest
+
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from cs537_spring2021_p3a_mapreduce_spark import streaming as st
@@ -411,15 +414,13 @@ def test_interval_join_state_is_watermark_bounded(spark, tmp_path):
         reader().where(F.col("event_type") == "purchase"),
         reader().where(F.col("event_type") == "click"),
     )
-    q = (
+    q = st.drain(
         j.writeStream.format("memory")
         .queryName("state_probe")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     states = [
         (p["stateOperators"][0]["numRowsTotal"], p["stateOperators"][0]["numRowsRemoved"])
         for p in q.recentProgress
@@ -477,15 +478,13 @@ def test_event_time_timeout_closes_idle_sessions(spark, tmp_path):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
+        st.drain(
             closed.writeStream.format("memory")
             .queryName("timeout_close")
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -1224,3 +1223,42 @@ def test_chained_windows_two_stateful_operators(spark):
     # some hour genuinely aggregates >1 fifteen-minute bucket —
     # otherwise the second stateful level would be vacuous
     assert any(nb > 1 for _, nb in got.values())
+
+
+@pytest.mark.parametrize("until", [None, lambda p: False], ids=["end", "until"])
+def test_drain_timeout_raises_and_stops(spark, tmp_path, monkeypatch, until):
+    """A stream that never ends (and whose ``until`` never holds) makes
+    ``drain`` raise at its bound rather than return partial output,
+    and leaves no stream running."""
+    monkeypatch.setattr(st, "DRAIN_TIMEOUT_S", 2)
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    with pytest.raises(TimeoutError):
+        st.drain(
+            rate.writeStream.format("memory")
+            .queryName("drain_timeout")
+            .option("checkpointLocation", str(tmp_path / "ckpt")),
+            until=until,
+        )
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("until", [None, lambda p: False], ids=["end", "until"])
+def test_drain_reraises_batch_failure_and_stops(
+    spark, tmp_path, events_stream_dir, until
+):
+    """A failing ``foreachBatch`` makes ``drain`` raise that failure
+    (promptly, not at the bound) and leaves no stream running."""
+
+    def boom(batch_df, batch_id):
+        raise ValueError("planted batch failure")
+
+    trigger = {"availableNow": True} if until is None else {"processingTime": "0 seconds"}
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        st.drain(
+            st.stream_events(spark, events_stream_dir)
+            .writeStream.foreachBatch(boom)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(**trigger),
+            until=until,
+        )
+    assert spark.streams.active == []
