@@ -1,17 +1,24 @@
-"""Text column expressions: tokenization and the reference's djb2
-partition function, both as pure Catalyst expressions.
+"""Text column expressions: tokenization, the sliding k-gram window
+over a token array, and the reference's djb2 partition function, all
+as pure Catalyst expressions.
 
 Reference trace:
 - tokenizer: `strsep` on " \\t\\n\\r" per line (main.c:22-27). We use
   the clean `\\s+` split and drop empty tokens; the reference's
   consecutive-delimiter truncation quirk (main.c:23-24) is a
   documented defect (SURVEY §4.3), not reproduced.
+- k-gram window: every n-gram/shingle operator slides a k-token
+  window over that token array. ``window_starts`` / ``ngrams`` are
+  the one construction — narrow per-row higher-order functions, no
+  lag/lead window and so no shuffle.
 - djb2: `hash*33+c` over key bytes, mod n_partitions
   (MR_DefaultHashPartition, mapreduce.c:88-94), with C unsigned
   64-bit wraparound semantics.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -32,6 +39,39 @@ def tokens(text: Column | str) -> Column:
     hot tokenize path."""
     col = F.col(text) if isinstance(text, str) else text
     return F.array_remove(F.split(col, r"\s+"), "")
+
+
+def window_starts(arr: Column | str, k: int) -> Column:
+    """Start indices ``0 .. size(arr)-k`` of every k-wide window over
+    an array column, or ``[]`` when the array holds fewer than ``k``
+    elements. The guard matters: ``sequence(0, -1)`` DESCENDS to
+    ``[0, -1]`` instead of being empty."""
+    col = F.col(arr) if isinstance(arr, str) else arr
+    return F.when(
+        F.size(col) >= k, F.sequence(F.lit(0), F.size(col) - k)
+    ).otherwise(F.array().cast("array<int>"))
+
+
+def ngrams(
+    arr: Column | str, k: int, combine: Callable[..., Column]
+) -> Column:
+    """``transform(window_starts(arr, k), i -> combine(arr[i], …,
+    arr[i+k-1]))`` — one value per k-gram, in order, duplicates kept
+    (a sequence shorter than ``k`` gives ``[]``). ``combine`` takes
+    the ``k`` element columns, e.g. ``F.xxhash64`` for an 8-byte
+    shingle identity or ``lambda *t: F.concat_ws(" ", *t)`` for the
+    joined string.
+
+    ``arr`` must be a NAMED column (a column name or ``F.col``), not
+    an inline expression such as ``tokens("text")``: Catalyst applies
+    no common-subexpression elimination inside lambda bodies, so an
+    inline array expression re-evaluates on every element access —
+    O(len²) per row. Project the array under a name first."""
+    col = F.col(arr) if isinstance(arr, str) else arr
+    return F.transform(
+        window_starts(col, k),
+        lambda i: combine(*[F.get(col, i + j) for j in range(k)]),
+    )
 
 
 def djb2_partition(key: Column | str, n_partitions: int) -> Column:

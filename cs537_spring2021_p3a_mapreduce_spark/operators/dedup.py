@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..session import track_persist
-from ..functions.text import tokens
+from ..functions.text import ngrams, tokens
 
 SHINGLE_K = 3
 N_HASHES = 32
@@ -44,19 +44,8 @@ def _shingles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricting to candidate docs (a semi-join-sized input instead
     of the whole corpus)."""
     docs = table(spark, sf_dir, "documents")
-    # materialize the token array as a named column FIRST: inlining
-    # tokens("text") into every F.get would re-run the split per
-    # element access (no CSE inside lambda bodies) — O(len²)
     toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(SHINGLE_K)]),
-    )
+    shingle_arr = ngrams("toks", SHINGLE_K, F.xxhash64)
     return toks.select("doc_id", F.explode(shingle_arr).alias("shingle"))
 
 
@@ -507,21 +496,16 @@ def _md5_fold_sql(arg: str, start: int, n_hex: int) -> str:
 
 def _string_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh string) WITH duplicates: word-SHINGLE_K-shingles
-    as unit-separator-joined STRINGS (not xxhash64 identities) — the
-    engine-portable identity the integer-minhash twin hashes and
-    verifies on. Fully narrow, same shape as ``_shingles_raw``."""
+    as unit-separator-joined STRINGS (token0␟token1␟token2, not
+    xxhash64 identities) — the engine-portable identity the
+    integer-minhash twins hash and verify on (DuckDB can rebuild the
+    string, not the hash). Fully narrow (``ngrams``), no shuffle: a
+    consumer that needs the SET deduplicates after it has folded the
+    strings to longs, or restricted them to candidate docs."""
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
+    shingle_arr = ngrams(
+        "toks", SHINGLE_K, lambda *t: F.concat_ws("\x1f", *t)
     )
     return toks.select("doc_id", F.explode(shingle_arr).alias("sh"))
 
@@ -543,6 +527,52 @@ def _minhash_int_ab() -> list[tuple[int, int]]:
 
 
 _MINHASH_INT_AB = _minhash_int_ab()
+
+
+def _minhash_int_candidates(hashed: DataFrame) -> DataFrame:
+    """PERSISTED (a_id < b_id) candidate pairs of the integer-MinHash
+    tier over ``hashed`` (doc_id, sh long): 32 universal-hash
+    min-aggregates over ONE (doc_id) hash aggregate (min is
+    duplicate-insensitive, so ``hashed`` needs no distinct), then an
+    equi-join on (band, band key) — bucket sizes, not corpus², bound
+    the work.
+
+    The band key is the md5-fold of the band's four mins — a single
+    48-bit long join key (the production operator's xxhash64 trick,
+    in the engine-portable hash) instead of a 4-long struct; the
+    ORACLES join on the SAME folded key, so even a fold collision
+    produces the identical candidate set on both engines. Persisted
+    because every caller reads the pairs more than once, and the
+    band join would otherwise replay per consumer."""
+    mins = [
+        F.min(
+            F.pmod(F.lit(a) * F.col("sh") + F.lit(b), F.lit(_MINHASH_INT_P))
+        ).alias(f"m{s}")
+        for s, (a, b) in enumerate(_MINHASH_INT_AB)
+    ]
+    sigs = hashed.groupBy("doc_id").agg(*mins)
+    band_sigs = F.array(
+        *[
+            _md5_fold(
+                F.concat_ws(
+                    ",",
+                    *[F.col(f"m{b * BAND_ROWS + r}") for r in range(BAND_ROWS)],
+                ),
+                1,
+                12,
+            )
+            for b in range(N_HASHES // BAND_ROWS)
+        ]
+    )
+    bands = sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "bs"))
+    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bs")
+    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bs")
+    return track_persist(
+        a.join(b, ["band", "bs"])
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
 
 
 def dedup_minhash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,47 +622,7 @@ def dedup_minhash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", _md5_fold(F.col("sh"), 1, 12).alias("sh")
         )
     )
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("sh") + F.lit(b), F.lit(_MINHASH_INT_P))
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.groupBy("doc_id").agg(*mins)
-    n_bands = N_HASHES // BAND_ROWS
-    # band signature: md5-fold of the band's four mins — a single
-    # 48-bit long join key (the production operator's xxhash64 trick,
-    # in the engine-portable hash) instead of a 4-long struct; the
-    # ORACLE joins on the SAME folded key, so even a fold collision
-    # produces the identical candidate set on both engines
-    band_sigs = F.array(
-        *[
-            _md5_fold(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{b * BAND_ROWS + r}")
-                        for r in range(BAND_ROWS)
-                    ],
-                ),
-                1,
-                12,
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "bs"))
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bs")
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bs")
-    # cands feeds FOUR consumers (both cand_ids projections, the
-    # verify join, and through shd's semi-join) — persist it like the
-    # production operator or the band join replays per consumer
-    cands = track_persist(
-        a.join(b, ["band", "bs"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cands = _minhash_int_candidates(hashed)
     cand_ids = (
         cands.select(F.col("a_id").alias("doc_id"))
         .unionByName(cands.select(F.col("b_id").alias("doc_id")))
@@ -1000,32 +990,6 @@ WHERE levenshtein(a.c_name, b.c_name) <= 1
 # 0.7 matches the MinHash tier's near-dup threshold.
 PPJOIN_T_NUM, PPJOIN_T_DEN = 7, 10
 PPJOIN_THRESHOLD = PPJOIN_T_NUM / PPJOIN_T_DEN
-
-
-def _string_shingle_expr(arr):
-    """Array of word-SHINGLE_K string shingles (token0␟token1␟…) from
-    a token-array column — the shared narrow sliding-window kernel."""
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-
-
-def _string_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) distinct word-3-shingles carried as the
-    joined STRING (token0␟token1␟token2) — the oracle-parity twin of
-    ``_shingles``' 8-byte xxhash64 identities (DuckDB can rebuild the
-    string, not the hash). Same narrow sliding-window construction."""
-    docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    shingle_arr = _string_shingle_expr(F.col("toks"))
-    return toks.select("doc_id", F.explode(shingle_arr).alias("sh")).distinct()
 
 
 def dedup_ppjoin(
@@ -1847,35 +1811,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", _md5_fold(F.col("sh"), 1, 12).alias("sh")
         )
     )
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("sh") + F.lit(b), F.lit(_MINHASH_INT_P))
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.groupBy("doc_id").agg(*mins)
-    n_bands = N_HASHES // BAND_ROWS
-    band_sigs = F.array(
-        *[
-            _md5_fold(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"m{b * BAND_ROWS + r}") for r in range(BAND_ROWS)],
-                ),
-                1,
-                12,
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "bs"))
-    cands = track_persist(
-        bands.select(F.col("doc_id").alias("a_id"), "band", "bs")
-        .join(bands.select(F.col("doc_id").alias("b_id"), "band", "bs"), ["band", "bs"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cands = _minhash_int_candidates(hashed)
     shd = track_persist(hashed.distinct())
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = shd.select(F.col("doc_id").alias("a_id"), "sh")

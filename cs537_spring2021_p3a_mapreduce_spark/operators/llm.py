@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..session import track_persist
-from ..functions.text import tokens
+from ..functions.text import ngrams, tokens
 from ..functions.vectors import cosine_similarity
 from ..scratch import scratch_dir
 
@@ -2366,23 +2366,24 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pair(a: Column, b: Column) -> Column:
+    """``ngrams`` combine for a (a, b) symbol-pair struct."""
+    return F.struct(a.alias("a"), b.alias("b"))
+
+
+def _words_struct(*ws: Column) -> Column:
+    """``ngrams`` combine for a (w1, …, wk) word struct."""
+    return F.struct(*[w.alias(f"w{j + 1}") for j, w in enumerate(ws)])
+
+
 def _bigram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, bigram) by sliding over the token array — fully
     narrow (a lead() window computes the same pairs but costs a
     shuffle+sort of every token row first; the order the window
-    would rebuild is already in the array). Token array materializes
-    as a named column first: Catalyst does not CSE expressions
-    inlined into lambda bodies."""
+    would rebuild is already in the array)."""
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    sliding = F.when(
-        F.size(arr) >= 2, F.sequence(F.lit(0), F.size(arr) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    bigram_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(" ", F.get(arr, i), F.get(arr, i + 1)),
-    )
+    bigram_arr = ngrams("toks", 2, lambda *t: F.concat_ws(" ", *t))
     return toks.select("doc_id", F.explode(bigram_arr).alias("bigram"))
 
 
@@ -2565,15 +2566,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    arr = F.col("ts")
-    n_windows = F.size(arr) - (SHINGLE_K_REP - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(SHINGLE_K_REP)]),
-    )
+    shingle_arr = ngrams("ts", SHINGLE_K_REP, F.xxhash64)
     total = F.size(shingle_arr).cast("long")
     distinct = F.size(F.array_distinct(shingle_arr)).cast("long")
     ratio = F.when(total > 0, F.round((total - distinct) / total, 6)).otherwise(
@@ -3612,21 +3605,6 @@ def _ann_band_bits(n: int) -> int:
     )
 
 
-def _doc_shingle_arr(k: int) -> Column:
-    """Sliding k-gram xxhash64 identities over a token array column
-    named ``ts`` — narrow, no shuffle (same construction as
-    dedup._shingles_raw, parameterized by k)."""
-    arr = F.col("ts")
-    n_windows = F.size(arr) - (k - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        sliding,
-        lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(k)]),
-    )
-
-
 def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     word-``DECON_K``-gram with a held-out eval set (here the
@@ -3646,7 +3624,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
     sh = toks.select(
-        "doc_id", F.explode(_doc_shingle_arr(DECON_K)).alias("sh")
+        "doc_id", F.explode(ngrams("ts", DECON_K, F.xxhash64)).alias("sh")
     ).distinct()
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     train_sh = sh.filter(~is_eval)
@@ -3720,7 +3698,7 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
     win = toks.select(
-        "doc_id", F.explode(_doc_shingle_arr(DUP_SPAN_K)).alias("sh")
+        "doc_id", F.explode(ngrams("ts", DUP_SPAN_K, F.xxhash64)).alias("sh")
     )
     per = win.groupBy("doc_id", "sh").agg(F.count(F.lit(1)).alias("c"))
     tot = per.groupBy("sh").agg(F.sum("c").alias("occ"))
@@ -3778,7 +3756,7 @@ def remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
     win = toks.select(
-        "doc_id", F.posexplode(_doc_shingle_arr(DUP_SPAN_K)).alias("i", "sh")
+        "doc_id", F.posexplode(ngrams("ts", DUP_SPAN_K, F.xxhash64)).alias("i", "sh")
     )
     keep = win.groupBy("sh").agg(F.min(F.struct("doc_id", "i")).alias("k"))
     dup_wins = (
@@ -4583,12 +4561,7 @@ def duplicate_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", tokens("text").alias("toks")
     )
     arr = F.col("toks")
-    starts = F.when(
-        F.size(arr) >= SPAN_N, F.sequence(F.lit(0), F.size(arr) - SPAN_N)
-    ).otherwise(F.array().cast("array<int>"))
-    span_arr = F.transform(
-        starts, lambda i: F.concat_ws(" ", F.slice(arr, i + 1, SPAN_N))
-    )
+    span_arr = ngrams(arr, SPAN_N, lambda *t: F.concat_ws(" ", *t))
     spans = docs.select(
         "doc_id", F.posexplode(span_arr).alias("pos", "span")
     )
@@ -4682,15 +4655,9 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     chars = F.filter(F.split(F.col("word"), ""), lambda c: c != F.lit(""))
-    pair_arr = F.when(
-        F.size(chars) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(chars) - 2),
-            lambda i: F.concat(F.get(chars, i), F.get(chars, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        words.select("n", F.explode(pair_arr).alias("pair"))
+        words.select("n", chars.alias("chars"))
+        .select("n", F.explode(ngrams("chars", 2, F.concat)).alias("pair"))
         .groupBy("pair")
         .agg(F.sum("n").alias("cnt"))
     )
@@ -4746,17 +4713,9 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     best_steps = []
     for step in range(1, BPE_TRAIN_MERGES + 1):
         syms = F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
-        prs = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(syms) - 2),
-                lambda i: F.struct(
-                    F.get(syms, i).alias("a"), F.get(syms, i + 1).alias("b")
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
         best = (
-            vocab.select("n", F.explode(prs).alias("pr"))
+            vocab.select("n", syms.alias("syms"))
+            .select("n", F.explode(ngrams("syms", 2, _pair)).alias("pr"))
             .select("n", "pr.a", "pr.b")
             .groupBy("a", "b")
             .agg(F.sum("n").alias("pc"))
@@ -6739,25 +6698,9 @@ def ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.lower("text")).alias("t"))
-    arr = F.col("t")
-    n_b = F.size(arr) - 1
-    bg_seq = F.when(n_b >= 1, F.sequence(F.lit(0), n_b - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bigrams = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    bg_seq,
-                    lambda i: F.struct(
-                        F.get(arr, i).alias("w1"), F.get(arr, i + 1).alias("w2")
-                    ),
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
+    bigrams = toks.select(
+        "doc_id", F.explode(ngrams("t", 2, _words_struct)).alias("bg")
+    ).select("doc_id", "bg.*")
     bigrams = track_persist(bigrams)
     uni = bigrams.groupBy("w1").agg(F.count(F.lit(1)).alias("cu"))
     bi = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
@@ -6849,20 +6792,10 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.lower("text")).alias("t"))
-    arr = F.col("t")
 
     def grams(n: int) -> DataFrame:
-        seq = F.when(
-            F.size(arr) >= n, F.sequence(F.lit(0), F.size(arr) - n)
-        ).otherwise(F.array().cast("array<int>"))
-        cols = lambda i: [  # noqa: E731
-            F.get(arr, i + k).alias(f"w{k + 1}") for k in range(n)
-        ]
         return toks.select(
-            "doc_id",
-            F.explode(F.transform(seq, lambda i: F.struct(*cols(i)))).alias(
-                "g"
-            ),
+            "doc_id", F.explode(ngrams("t", n, _words_struct)).alias("g")
         ).select("doc_id", "g.*")
 
     tri = track_persist(grams(3))
@@ -7013,30 +6946,20 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     hashed = toks.select("doc_id", th.alias("th"))
-    arr = F.col("th")
-    n_g = F.size(arr) - (WINNOW_K - 1)
 
-    def kgram(i: F.Column) -> F.Column:
-        acc = F.get(arr, i)
-        for j in range(1, WINNOW_K):
-            acc = F.pmod(acc * F.lit(FP_BASE) + F.get(arr, i + j), F.lit(FP_MOD))
+    def kgram(*hs: F.Column) -> F.Column:
+        acc = hs[0]
+        for h in hs[1:]:
+            acc = F.pmod(acc * F.lit(FP_BASE) + h, F.lit(FP_MOD))
         return acc
 
-    grams_seq = F.when(n_g >= 1, F.sequence(F.lit(0), n_g - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
+    # each k-gram hash is tagged with its window start (low digits)
     enc = F.transform(
-        grams_seq, lambda i: kgram(i) * F.lit(_WINNOW_POS) + i.cast("long")
+        ngrams("th", WINNOW_K, kgram),
+        lambda g, i: g * F.lit(_WINNOW_POS) + i.cast("long"),
     )
     with_enc = hashed.select("doc_id", enc.alias("enc"))
-    e = F.col("enc")
-    n_w = F.size(e) - (WINNOW_W - 1)
-    wins_seq = F.when(n_w >= 1, F.sequence(F.lit(0), n_w - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    selected = F.array_distinct(
-        F.transform(wins_seq, lambda w: F.array_min(F.slice(e, w + 1, WINNOW_W)))
-    )
+    selected = F.array_distinct(ngrams("enc", WINNOW_W, F.least))
     return (
         with_enc.select("doc_id", F.explode(selected).alias("sel"))
         .select(
@@ -9239,18 +9162,8 @@ def _wp_rounds(spark: SparkSession, sf_dir: str):
             .groupBy("sym")
             .agg(F.sum("n").alias("c"))
         )
-        prs = F.when(
-            F.size("syms") >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size("syms") - 2),
-                lambda i: F.struct(
-                    F.get(F.col("syms"), i).alias("a"),
-                    F.get(F.col("syms"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
         pc = (
-            with_syms.select("n", F.explode(prs).alias("pr"))
+            with_syms.select("n", F.explode(ngrams("syms", 2, _pair)).alias("pr"))
             .select("n", "pr.a", "pr.b")
             .groupBy("a", "b")
             .agg(F.sum("n").alias("pc"))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.text import ngrams
 
 # ---------------------------------------------------------------------------
 # event_pattern_match — CEP via regex over the per-user event-type string
@@ -885,20 +886,10 @@ def frequent_event_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["event_type"],
         ).alias("types")
     )
-    arr = F.col("types")
-    n_t = F.size(arr) - 2
-    tri_seq = F.when(n_t >= 1, F.sequence(F.lit(0), n_t - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
     triples = seqs.select(
-        F.explode(
-            F.transform(
-                tri_seq,
-                lambda i: F.concat_ws(
-                    ">", F.get(arr, i), F.get(arr, i + 1), F.get(arr, i + 2)
-                ),
-            )
-        ).alias("triple")
+        F.explode(ngrams("types", 3, lambda *t: F.concat_ws(">", *t))).alias(
+            "triple"
+        )
     )
     return (
         triples.groupBy("triple")

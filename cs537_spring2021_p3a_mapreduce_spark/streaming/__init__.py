@@ -1026,24 +1026,14 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..functions.text import tokens
+    from ..functions.text import ngrams, tokens
     from ..operators.llm import DECON_EVAL_MOD, DECON_K
 
     work = scratch_dir("stream_dc_")
 
     def gram_arr() -> F.Column:
-        arr = F.col("ts")
-        n_win = F.size(arr) - (DECON_K - 1)
-        sliding = F.when(
-            n_win >= 1, F.sequence(F.lit(0), n_win - 1)
-        ).otherwise(F.array().cast("array<int>"))
         return F.array_distinct(
-            F.transform(
-                sliding,
-                lambda i: F.concat_ws(
-                    "\x1f", *[F.get(arr, i + j) for j in range(DECON_K)]
-                ),
-            )
+            ngrams("ts", DECON_K, lambda *t: F.concat_ws("\x1f", *t))
         )
 
     ev_docs = (
@@ -1304,55 +1294,10 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..functions.text import tokens
-    from ..operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        SHINGLE_K,
-        _md5_fold,
-    )
-
     work = scratch_dir("stream_mh_")
     docs = _staged_stream(spark, sf_dir, work, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        shingle_arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    # filter on the TOKEN count (>= 1 shingle window ⟺ >= SHINGLE_K
-    # tokens) BEFORE projecting the folds: a post-projection
-    # size(hs) >= 1 filter gets pushed below the projection with the
-    # whole md5-fold pipeline substituted in — and the tokenize
-    # re-evaluates inside the per-element lambdas (measured 0.4 s →
-    # 7.5 s on 10k docs at sf0.1)
-    hashed = toks.where(F.size("toks") >= SHINGLE_K).select(
-        "doc_id", folds.alias("hs")
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.select("doc_id", *mins)
-    sig = _md5_fold(
-        F.concat_ws(",", *[F.col(f"m{s}") for s in range(len(_MINHASH_INT_AB))]),
-        1,
-        12,
-    )
     out = (
-        sigs.select("doc_id", sig.alias("sig"))
+        _lsh_signatures(docs)
         .groupBy("sig")
         .agg(
             F.min("doc_id").alias("keeper_doc_id"),
@@ -1431,58 +1376,10 @@ def stream_dedup_docs_minhash_bounded(
     """
     import uuid
 
-    from ..functions.text import tokens
-    from ..operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        SHINGLE_K,
-        _md5_fold,
-    )
-
     work = scratch_dir("stream_mhb_")
     docs = _staged_stream(spark, sf_dir, work, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.timestamp_seconds(F.lit(_LSH_EV_EPOCH) + F.col("doc_id")).alias(
-            "ev"
-        ),
-        tokens("text").alias("toks"),
-    )
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        shingle_arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    # pre-filter on token count, not size(hs) — see the
-    # stream_dedup_docs_minhash comment (pushdown re-inlines the fold
-    # pipeline into per-element lambdas otherwise)
-    hashed = toks.where(F.size("toks") >= SHINGLE_K).select(
-        "doc_id", "ev", folds.alias("hs")
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.select("doc_id", "ev", *mins)
-    sig = _md5_fold(
-        F.concat_ws(",", *[F.col(f"m{s}") for s in range(len(_MINHASH_INT_AB))]),
-        1,
-        12,
-    )
     survivors = dedup_stream(
-        sigs.select("doc_id", "ev", sig.alias("sig")),
+        _lsh_signatures(docs),
         key="sig",
         ts_col="ev",
         watermark=LSH_WATERMARK,
@@ -1560,24 +1457,13 @@ def _lsh_hashed(docs: DataFrame) -> DataFrame:
     the verify sets are bit-identical to what the band rows hashed.
     Docs under SHINGLE_K tokens have no shingles and pass through
     unexamined (never banded), as in every tier."""
-    from ..functions.text import tokens
-    from ..operators.dedup import SHINGLE_K
+    from ..functions.text import ngrams, tokens
+    from ..operators.dedup import SHINGLE_K, _md5_fold
 
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
+    shingle_arr = ngrams(
+        "toks", SHINGLE_K, lambda *t: F.concat_ws("\x1f", *t)
     )
-    folds = F.transform(
-        shingle_arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
+    folds = F.transform(shingle_arr, lambda s: _md5_fold(s, 1, 12))
     return (
         docs.select(
             "doc_id",
@@ -1586,12 +1472,44 @@ def _lsh_hashed(docs: DataFrame) -> DataFrame:
             ).alias("ev"),
             tokens("text").alias("toks"),
         )
-        # pre-filter on token count, not size(hs): pushing a
-        # size(hs) >= 1 filter below the fold projection re-inlines
-        # the tokenize into the per-element lambdas (see
-        # stream_dedup_docs_minhash; measured 16 s → <1 s at sf0.1)
+        # filter on the TOKEN count (>= 1 shingle window ⟺ >=
+        # SHINGLE_K tokens) BEFORE projecting the folds: a
+        # post-projection size(hs) >= 1 filter gets pushed below the
+        # projection with the whole md5-fold pipeline substituted in,
+        # and the tokenize re-evaluates inside the per-element
+        # lambdas (measured 16 s → <1 s at sf0.1)
         .where(F.size("toks") >= SHINGLE_K)
         .select("doc_id", "ev", folds.alias("hs"))
+    )
+
+
+def _lsh_mins() -> list[F.Column]:
+    """The 32 integer-MinHash signature columns ``m0..m31`` over a
+    fold array ``hs``: per seed, the array_min of the universal hash
+    (a·h + b) mod (2⁶¹−1) — narrow per row, no explode."""
+    from ..operators.dedup import _MINHASH_INT_AB, _MINHASH_INT_P
+
+    return [
+        F.array_min(
+            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
+        ).alias(f"m{s}")
+        for s, (a, b) in enumerate(_MINHASH_INT_AB)
+    ]
+
+
+def _lsh_signatures(docs: DataFrame) -> DataFrame:
+    """``(doc_id, ev, sig)``: each doc's whole 32-min signature
+    md5-folded to one long — the key the two signature-identity
+    dedup entries collapse on."""
+    from ..operators.dedup import N_HASHES, _md5_fold
+
+    sig = _md5_fold(
+        F.concat_ws(",", *[F.col(f"m{s}") for s in range(N_HASHES)]), 1, 12
+    )
+    return (
+        _lsh_hashed(docs)
+        .select("doc_id", "ev", *_lsh_mins())
+        .select("doc_id", "ev", sig.alias("sig"))
     )
 
 
@@ -1636,22 +1554,9 @@ def _lsh_band_rows(
     band rows cut that to 8 × ~32 bytes per doc; the price moved to
     one static-side lookup join per emitted candidate, which is the
     right trade at any corpus size (candidates ≪ band rows)."""
-    from ..operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        BAND_ROWS,
-        N_HASHES,
-        _md5_fold,
-    )
+    from ..operators.dedup import BAND_ROWS, N_HASHES, _md5_fold
 
-    hashed = _lsh_hashed(docs)
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.select("doc_id", "ev", *mins)
+    sigs = _lsh_hashed(docs).select("doc_id", "ev", *_lsh_mins())
     band_keys = F.array(
         *[
             _md5_fold(

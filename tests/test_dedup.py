@@ -309,7 +309,7 @@ def test_ppjoin_prefix_excludes_hot_shingles(spark):
         [(k, v, "en", "t", len(v)) for k, v in corpus],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(os.path.join(d, "documents.parquet"))
-    posting = dedup._string_shingles(spark, d)
+    posting = dedup._string_shingles(spark, d).distinct()
     freq = posting.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     sizes = posting.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     ranked = (

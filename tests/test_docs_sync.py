@@ -6,6 +6,7 @@ were registered)."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
@@ -89,3 +90,30 @@ def test_scale_md_rows_only_count_in_sync():
             f"SCALE.md says {c} rows-only; registration has "
             f"{len(ROWS_ONLY_BY_NATURE)}"
         )
+
+
+def test_no_top_level_name_defined_twice():
+    """F811 for the package (no linter is installed): a second
+    top-level ``def``/``class`` of the same name silently SHADOWS the
+    first for every caller — two ``_string_shingles`` once made the
+    integer-MinHash queries bind the distinct-ing copy and pay a
+    corpus-wide aggregate their docstrings said they avoid."""
+    pkg = os.path.join(ROOT, "cs537_spring2021_p3a_mapreduce_spark")
+    twice = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            seen: set[str] = set()
+            for node in tree.body:
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    if node.name in seen:
+                        rel = os.path.relpath(path, ROOT)
+                        twice.append(f"{rel}:{node.lineno} {node.name}")
+                    seen.add(node.name)
+    assert not twice, f"top-level names defined twice: {twice}"

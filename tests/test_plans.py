@@ -107,6 +107,16 @@ def test_minhash_band_keys_are_longs_not_strings(spark):
     assert "xxhash64" in text
 
 
+def test_string_shingles_are_narrow(spark):
+    """The (doc_id, sh) string-shingle bag the integer-MinHash twins
+    fold and hash is a narrow per-row slide: no corpus-wide distinct
+    before the md5 fold (min signatures are duplicate-insensitive,
+    and the verify deduplicates later on 8-byte longs)."""
+    from cs537_spring2021_p3a_mapreduce_spark.operators import dedup
+
+    assert P.shuffle_count(dedup._string_shingles(spark, SF_SMOKE)) == 0
+
+
 def test_ivf_centroid_selection_is_topk_not_global_sort(spark):
     """Fixed-K centroids pick via per-partition top-K merge
     (TakeOrderedAndProject), never a full sort of the corpus."""

@@ -1,19 +1,22 @@
 """Property-based tests (hypothesis) for the contract-critical pure
-functions: the bit-exact djb2 partitioner and the tokenizer. These
+functions: the bit-exact djb2 partitioner, the tokenizer and the
+sliding k-gram window. These
 run the Spark EXPRESSIONS against independent Python models over
 randomized inputs — the expression-level analog of the reference's
 sequential-vs-concurrent differential oracle (SURVEY §5)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
 from cs537_spring2021_p3a_mapreduce_spark.functions.text import (
     djb2_partition,
+    ngrams,
     tokens,
+    window_starts,
 )
 
 # printable ASCII without whitespace — the reference reads bytes and
@@ -66,6 +69,38 @@ def test_tokens_expression_matches_python_split(spark, texts):
         # str.split() == split on whitespace runs, empties dropped —
         # the clean semantics SURVEY §2.A (A3) declares
         assert list(r.toks) == r.text.split()
+
+
+@given(
+    seqs=st.lists(
+        st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=0, max_size=8),
+        min_size=1,
+        max_size=6,
+    ),
+    k=st.integers(min_value=1, max_value=4),
+)
+@example(seqs=[[], ["a"], ["a", "b", "c"]], k=4)  # all shorter than k
+@example(seqs=[["a", "b", "c", "d"], ["a"]], k=1)
+@_SETTINGS
+def test_ngrams_kernel_matches_python_slices(spark, seqs, k):
+    """``ngrams``/``window_starts`` equal Python's k-wide slices over
+    every sequence, in order and with duplicates; a sequence shorter
+    than k has no window at all (not the [0, -1] a bare
+    ``sequence(0, size-k)`` would give)."""
+    df = spark.createDataFrame(
+        list(enumerate(seqs)), "i int, ts array<string>"
+    )
+    rows = df.select(
+        "i",
+        window_starts("ts", k).alias("starts"),
+        ngrams("ts", k, F.array).alias("grams"),
+    ).collect()
+    assert len(rows) == len(seqs)
+    for r in rows:
+        xs = seqs[r.i]
+        want = [xs[i : i + k] for i in range(len(xs) - k + 1)]
+        assert [list(g) for g in r.grams] == want
+        assert list(r.starts) == list(range(len(want)))
 
 
 def test_funnel_stages_are_monotone_non_increasing(spark):

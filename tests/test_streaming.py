@@ -717,6 +717,26 @@ def test_stream_dedup_docs_lsh_matches_batch_banding(spark):
     assert len(got) > 0  # fixtures contain near-dups; parity isn't vacuous
 
 
+def test_lsh_shd_lookup_covers_every_banded_doc(spark):
+    """The exact LSH tier attaches each candidate's shingle set with
+    an INNER join on ``_lsh_shd_lookup`` after the band join; a
+    banded doc missing from the lookup would drop its candidate
+    pairs without any error. Left-join the banded docs against the
+    lookup on the fixture: every one must find its set."""
+    from cs537_spring2021_p3a_mapreduce_spark.streaming import (
+        LSH_WATERMARK,
+        _lsh_band_rows,
+        _lsh_shd_lookup,
+    )
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    banded = _lsh_band_rows(docs, LSH_WATERMARK).select("doc_id").distinct()
+    joined = banded.join(_lsh_shd_lookup(docs), "doc_id", "left")
+    assert banded.count() > 0
+    assert joined.where(F.col("shd").isNull()).count() == 0
+    assert joined.where(F.size("shd") < 1).count() == 0
+
+
 def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
     """The IMPLEMENTED state bound, probed on a staged multi-batch
     drain: with horizon=1000 s and watermark=100 s, a near-dup 300 s
@@ -915,17 +935,8 @@ def test_bounded_minhash_dedup_horizon_reemission_and_eviction(spark, tmp_path):
     import shutil
     import uuid
 
-    from pyspark.sql import functions as F
-
-    from cs537_spring2021_p3a_mapreduce_spark.functions.text import tokens
-    from cs537_spring2021_p3a_mapreduce_spark.operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        SHINGLE_K,
-        _md5_fold,
-    )
     from cs537_spring2021_p3a_mapreduce_spark.streaming import (
-        _LSH_EV_EPOCH,
+        _lsh_signatures,
         dedup_stream,
         run_to_memory,
     )
@@ -958,42 +969,9 @@ def test_bounded_minhash_dedup_horizon_reemission_and_eviction(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    toks = docs.select(
-        "doc_id",
-        F.timestamp_seconds(F.lit(_LSH_EV_EPOCH) + F.col("doc_id")).alias("ev"),
-        tokens("text").alias("toks"),
+    survivors = dedup_stream(
+        _lsh_signatures(docs), key="sig", ts_col="ev", watermark="100 seconds"
     )
-    arr = F.col("toks")
-    nw = F.size(arr) - (SHINGLE_K - 1)
-    sh = F.transform(
-        F.when(nw >= 1, F.sequence(F.lit(0), nw - 1)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long")
-    )
-    hashed = toks.select("doc_id", "ev", folds.alias("hs")).where(
-        F.size("hs") >= 1
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sig = _md5_fold(
-        F.concat_ws(",", *[F.col(f"m{s}") for s in range(len(_MINHASH_INT_AB))]),
-        1,
-        12,
-    )
-    sigs = hashed.select("doc_id", "ev", *mins).select(
-        "doc_id", "ev", sig.alias("sig")
-    )
-    survivors = dedup_stream(sigs, key="sig", ts_col="ev", watermark="100 seconds")
     name = f"mhb_evict_{uuid.uuid4().hex[:8]}"
     q = run_to_memory(
         survivors.select("doc_id", "sig"),
